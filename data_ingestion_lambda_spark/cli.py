@@ -43,20 +43,13 @@ def _read_event_batch(spark, path: str):
     day-boundary expressions need a regular (UTC) TIMESTAMP — without
     this, the same data that works through the registered lanes fails
     the CLI apply with an analysis error."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from data_ingestion_lambda_spark.sources.catalog import ts_as_timestamp
 
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(path)
-    field = {f.name: f.dataType for f in df.schema.fields}.get("ts")
-    if isinstance(field, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(field, TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return ts_as_timestamp(spark.read.parquet(path))
 
 
 def _add_stream_args(sub_parser, noun: str) -> None:

@@ -142,10 +142,11 @@ def streaming_committed_front_key(
     batch folded early double-counts on replay, and the b-keyed stores'
     ``check_not_below_horizon`` refusal would otherwise wedge the stream
     permanently). None when the checkpoint has no commits yet."""
+    from data_ingestion_lambda_spark.streaming import batch_key
     from data_ingestion_lambda_spark.streaming.events import _committed_front
 
     front = _committed_front(spark, checkpoint_dir)
-    return None if front is None else f"b{front + 1:09d}"
+    return None if front is None else batch_key(front + 1)
 
 
 def auto_keep_from(

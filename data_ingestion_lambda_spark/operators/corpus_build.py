@@ -355,41 +355,47 @@ def run_corpus_build_available_now(
     split in which a re-crawl lands no earlier than its original (the
     gate-in-front contract; pinned in tests/test_corpus_build.py).
     Returns the per-batch gate reports; a no-op drain returns []."""
-    from data_ingestion_lambda_spark.streaming.index_streams import (
-        _auto_compact_after_drain,
-        _drain,
-    )
-
-    reports = _drain(
-        spark,
-        source_dir,
-        checkpoint_dir,
-        CORPUS_DOCS_SCHEMA,
-        lambda batch, key: gate_and_ledger_batch(spark, work_dir, batch, key),
-        max_files_per_trigger,
+    from data_ingestion_lambda_spark.operators.base_fold import (
+        auto_compact_epilogue,
     )
     from data_ingestion_lambda_spark.operators.dedup_gate import compact_gate_index
+    from data_ingestion_lambda_spark.streaming import drain_available_now, file_stream
+    from data_ingestion_lambda_spark.streaming.index_streams import keyed_body
+
+    reports = drain_available_now(
+        file_stream(
+            spark, "parquet", source_dir, CORPUS_DOCS_SCHEMA, max_files_per_trigger
+        ),
+        checkpoint_dir,
+        keyed_body(
+            lambda batch, key: gate_and_ledger_batch(spark, work_dir, batch, key)
+        ),
+    )
+
+    def _epilogue(label: str, ledger_dir: str, compact_fn, count_dir=None) -> None:
+        policy = auto_compact_epilogue(
+            spark,
+            ledger_dir,
+            max_dirs=auto_compact_max_dirs,
+            compact_fn=compact_fn,
+            checkpoint_dir=checkpoint_dir,
+            count_dir=count_dir,
+        )
+        if policy is not None:
+            reports.append({label: {"auto_compact": policy}})
 
     for name in (EXACT_INDEX, MINHASH_INDEX):
-        ac = _auto_compact_after_drain(
-            spark,
+        _epilogue(
+            name,
             _store(work_dir, name),
-            checkpoint_dir,
-            auto_compact_max_dirs,
             lambda kf, _d=_store(work_dir, name): compact_gate_index(spark, _d, kf),
         )
-        if ac is not None:
-            reports.append({name: ac})
-    ac = _auto_compact_after_drain(
-        spark,
+    _epilogue(
+        "ledgers",
         work_dir,
-        checkpoint_dir,
-        auto_compact_max_dirs,
         lambda kf: compact_corpus_ledgers(spark, work_dir, kf),
-        count_dir=_store(work_dir, DOCS),
+        _store(work_dir, DOCS),
     )
-    if ac is not None:
-        reports.append({"ledgers": ac})
     return reports
 
 

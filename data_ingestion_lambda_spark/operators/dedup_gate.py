@@ -65,6 +65,7 @@ from data_ingestion_lambda_spark.plans.llm_ops import (
     minhash_band_keys,
     minhash_sig_table,
 )
+from data_ingestion_lambda_spark.plans.registry import pin, pin_scope
 from data_ingestion_lambda_spark.plans.similarity import (
     _band_keyed,
     _score_bucket_group,
@@ -93,12 +94,18 @@ _MODE_SCHEMAS = {
     "embedding": "doc_id long, sig array<float>",
 }
 
-# Batch input column per mode: text modes sketch (doc_id, text) document
+# Batch input per mode: text modes sketch (doc_id, text) document
 # batches; the embedding mode gates (vec_id-keyed) embedding batches.
+# MODE_INPUT_SCHEMA is the streaming front's file-source schema.
 MODE_INPUT_COL = {
     "minhash": "text",
     "exact": "text",
     "embedding": "embedding",
+}
+MODE_INPUT_SCHEMA = {
+    "minhash": "doc_id bigint, text string",
+    "exact": "doc_id bigint, text string",
+    "embedding": "doc_id bigint, embedding array<float>",
 }
 
 
@@ -142,25 +149,52 @@ def read_index(
     return spark.createDataFrame([], schema=_MODE_SCHEMAS[mode])
 
 
-def _rescore(cand: DataFrame, new_sig: DataFrame, old_sig: DataFrame) -> DataFrame:
-    """Signature-agreement rescore of candidate (new_doc, dup_of) pairs —
-    identical arithmetic to dedup_minhash_lsh's verification step."""
-    sn = new_sig.alias("sn")
-    so = old_sig.alias("so")
+def _agreement(new_sig_col, old_sig_col):
+    """est_jaccard of two signatures: the share of the NUM_HASHES
+    positions that agree — identical arithmetic to dedup_minhash_lsh's
+    verification step."""
     matches = F.size(
         F.filter(
             F.sequence(F.lit(1), F.lit(NUM_HASHES)),
-            lambda i: F.element_at(F.col("sn.sig"), i)
-            == F.element_at(F.col("so.sig"), i),
+            lambda i: F.element_at(new_sig_col, i) == F.element_at(old_sig_col, i),
         )
     )
-    est = matches.cast("double") / NUM_HASHES
+    return matches.cast("double") / NUM_HASHES
+
+
+def _rescore(cand: DataFrame, new_sig: DataFrame, old_sig: DataFrame) -> DataFrame:
+    """Signature-agreement rescore of candidate (new_doc, dup_of) pairs,
+    keeping those at or above EST_JACCARD_MIN."""
+    sn = new_sig.alias("sn")
+    so = old_sig.alias("so")
     return (
         cand.join(sn, F.col("new_doc") == F.col("sn.doc_id"))
         .join(so, F.col("dup_of") == F.col("so.doc_id"))
-        .select("new_doc", "dup_of", est.alias("est_jaccard"))
+        .select(
+            "new_doc",
+            "dup_of",
+            _agreement(F.col("sn.sig"), F.col("so.sig")).alias("est_jaccard"),
+        )
         .filter(F.col("est_jaccard") >= EST_JACCARD_MIN)
     )
+
+
+def _within_batch(new_sig: DataFrame, new_bands: DataFrame) -> DataFrame:
+    """Same-batch near-dup flags: the batch's band keys self-joined,
+    oriented new_doc > dup_of (the later-arriving id flags), rescored —
+    match_kind 'batch'."""
+    cand = (
+        new_bands.alias("n")
+        .join(
+            new_bands.alias("m"),
+            (F.col("n.j") == F.col("m.j"))
+            & (F.col("n.band_key") == F.col("m.band_key"))
+            & (F.col("n.doc_id") > F.col("m.doc_id")),
+        )
+        .select(F.col("n.doc_id").alias("new_doc"), F.col("m.doc_id").alias("dup_of"))
+        .distinct()
+    )
+    return _rescore(cand, new_sig, new_sig).withColumn("match_kind", F.lit("batch"))
 
 
 def _exact_pairs(new_sig: DataFrame, old_sig: DataFrame) -> DataFrame:
@@ -275,10 +309,9 @@ def probe_batch(
         return _embedding_pairs(new_sig, old_sig)
     new_bands = minhash_band_keys(new_sig)
     old_bands = minhash_band_keys(old_sig)
-
-    nb = new_bands.alias("n")
     cross = (
-        nb.join(
+        new_bands.alias("n")
+        .join(
             old_bands.alias("o"),
             (F.col("n.j") == F.col("o.j"))
             & (F.col("n.band_key") == F.col("o.band_key")),
@@ -286,21 +319,9 @@ def probe_batch(
         .select(F.col("n.doc_id").alias("new_doc"), F.col("o.doc_id").alias("dup_of"))
         .distinct()
     )
-    within = (
-        nb.join(
-            new_bands.alias("m"),
-            (F.col("n.j") == F.col("m.j"))
-            & (F.col("n.band_key") == F.col("m.band_key"))
-            & (F.col("n.doc_id") > F.col("m.doc_id")),
-        )
-        .select(F.col("n.doc_id").alias("new_doc"), F.col("m.doc_id").alias("dup_of"))
-        .distinct()
-    )
     return _rescore(cross, new_sig, old_sig).withColumn(
         "match_kind", F.lit("index")
-    ).unionByName(
-        _rescore(within, new_sig, new_sig).withColumn("match_kind", F.lit("batch"))
-    )
+    ).unionByName(_within_batch(new_sig, new_bands))
 
 
 def apply_batch(
@@ -336,36 +357,48 @@ def apply_batch(
     # re-delivery could neither overwrite itself nor exclude its own
     # earlier write from the probe — refuse, like every folded store.
     check_not_below_horizon(spark, index_dir, batch_date, f"dedup-gate {mode} apply")
-    matches = probe_batch(
-        spark,
-        index_dir,
-        batch_docs,
-        exclude_date=batch_date,
-        mode=mode,
-        before_date=before_date,
-    ).persist()
-    try:
-        n_pairs = matches.count()
-        n_flagged = matches.select("new_doc").distinct().count()
-        if matches_dir is not None:
-            replace_partitions(
+    # Everything this call pins (the flag table, the batch signatures)
+    # is released on the way out: a stream calls it once per micro-batch.
+    with pin_scope():
+        matches = pin(
+            probe_batch(
                 spark,
-                matches_dir,
-                matches.withColumn(PARTITION_COL, F.lit(batch_date)),
-                [batch_date],
+                index_dir,
+                batch_docs,
+                exclude_date=batch_date,
+                mode=mode,
+                before_date=before_date,
             )
+        )
+        flags = _count_and_land_matches(spark, matches, matches_dir, batch_date)
         sig = _sig_table(batch_docs, mode).withColumn(
             PARTITION_COL, F.lit(batch_date)
         )
         replace_partitions(spark, index_dir, sig, [batch_date])
-    finally:
-        matches.unpersist()
-    return {
-        "date": batch_date,
-        "batch_docs": batch_docs.count(),
-        "dup_pairs": n_pairs,
-        "flagged_docs": n_flagged,
+    return {"date": batch_date, "batch_docs": batch_docs.count(), **flags}
+
+
+def _count_and_land_matches(
+    spark: SparkSession,
+    matches: DataFrame,
+    matches_dir: str | None,
+    batch_date: str,
+) -> dict:
+    """Count a (pinned) flag table's pairs and flagged docs, then land it
+    under the batch's own ``date=`` partition of ``matches_dir`` when
+    one is given."""
+    flags = {
+        "dup_pairs": matches.count(),
+        "flagged_docs": matches.select("new_doc").distinct().count(),
     }
+    if matches_dir is not None:
+        replace_partitions(
+            spark,
+            matches_dir,
+            matches.withColumn(PARTITION_COL, F.lit(batch_date)),
+            [batch_date],
+        )
+    return flags
 
 
 def compact_gate_index(spark: SparkSession, index_dir: str, keep_from: str) -> dict:
@@ -449,17 +482,6 @@ def _bands_with_sig(sig: DataFrame) -> DataFrame:
     )
 
 
-def _agreement(new_sig_col, old_sig_col):
-    """est_jaccard — the exact arithmetic of _rescore, in-row."""
-    matches = F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.lit(NUM_HASHES)),
-            lambda i: F.element_at(new_sig_col, i) == F.element_at(old_sig_col, i),
-        )
-    )
-    return matches.cast("double") / NUM_HASHES
-
-
 def probe_batch_bucketed(
     spark: SparkSession,
     table_name: str,
@@ -498,22 +520,7 @@ def probe_batch_bucketed(
     else:
         cross = None
 
-    bands_only = minhash_band_keys(new_sig)
-    a = bands_only.alias("a")
-    b = bands_only.alias("b")
-    within_pairs = (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") > F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("new_doc"), F.col("b.doc_id").alias("dup_of"))
-        .distinct()
-    )
-    within = _rescore(within_pairs, new_sig, new_sig).withColumn(
-        "match_kind", F.lit("batch")
-    )
+    within = _within_batch(new_sig, minhash_band_keys(new_sig))
     return within if cross is None else cross.unionByName(within)
 
 
@@ -530,19 +537,11 @@ def apply_batch_bucketed(
     First batch creates the table (partitioned by date, bucketed by bkey);
     replays overwrite ONLY their own partition via dynamic-partition
     insertInto — same idempotence contract as the directory gate."""
-    matches = probe_batch_bucketed(
-        spark, table_name, batch_docs, exclude_date=batch_date
-    ).persist()
-    try:
-        n_pairs = matches.count()
-        n_flagged = matches.select("new_doc").distinct().count()
-        if matches_dir is not None:
-            replace_partitions(
-                spark,
-                matches_dir,
-                matches.withColumn(PARTITION_COL, F.lit(batch_date)),
-                [batch_date],
-            )
+    with pin_scope():
+        matches = pin(
+            probe_batch_bucketed(spark, table_name, batch_docs, exclude_date=batch_date)
+        )
+        flags = _count_and_land_matches(spark, matches, matches_dir, batch_date)
         rows = _bands_with_sig(_sig_table(batch_docs, "minhash")).withColumn(
             PARTITION_COL, F.lit(batch_date)
         )
@@ -571,11 +570,4 @@ def apply_batch_bucketed(
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, prev)
-    finally:
-        matches.unpersist()
-    return {
-        "date": batch_date,
-        "batch_docs": batch_docs.count(),
-        "dup_pairs": n_pairs,
-        "flagged_docs": n_flagged,
-    }
+    return {"date": batch_date, "batch_docs": batch_docs.count(), **flags}

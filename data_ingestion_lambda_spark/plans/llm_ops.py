@@ -382,8 +382,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     is UTF-16-unit-wise, Python iterates codepoints);
 #   - the folds are the same exact integers: Python ints cannot overflow
 #     and the JVM long never does for P ~ 1e9.
-# tests/test_twin_equivalence.py pins fast slice == JVM slice bit-for-bit
-# over an adversarial generated corpus.
+# tests/test_twin_equivalence.py pins fast slice == JVM slice bit for bit
+# over an adversarial generated corpus for the minhash, simhash and
+# repetition twins (and non-ASCII rows on minhash's JVM slice); the
+# fingerprint, shingles62, decon and dsir twins are not covered there.
 # ---------------------------------------------------------------------------
 
 _WS_ASCII_RE = None  # compiled once per Python worker (guide §4.5)

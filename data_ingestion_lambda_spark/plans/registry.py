@@ -18,6 +18,7 @@ Determinism contract for oracle-checked specs:
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +65,22 @@ def release_pinned(blocking: bool = False) -> int:
             pass  # session already stopped — nothing to release
     _PINNED.clear()
     return n
+
+
+@contextmanager
+def pin_scope():
+    """Unpersist, on exit, every frame pin()ned inside the block; frames
+    pinned before it stay pinned. For per-call work in a long-lived
+    process (a stream's micro-batch body), whose pins would otherwise
+    accumulate for the life of the session — release_pinned() there
+    would also drop pins the caller still relies on."""
+    mark = len(_PINNED)
+    try:
+        yield
+    finally:
+        for df in _PINNED[mark:]:
+            df.unpersist()
+        del _PINNED[mark:]
 
 
 @dataclass(frozen=True)

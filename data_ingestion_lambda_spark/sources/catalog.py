@@ -68,21 +68,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         except Exception:
             pass  # read-only conf in some deployments; the read may still work
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # Normalize events.ts to a regular (UTC) TIMESTAMP whatever the
-        # generator wrote:
-        # - parquet TIMESTAMP(NANOS) + nanosAsLong arrives as epoch-nanos;
-        #   truncate to µs with integer division (ns values exceed 2^53,
-        #   so double arithmetic would corrupt them);
-        # - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
-        #   TIMESTAMP_NTZ under Spark 4's inferTimestampNTZ; cast to LTZ —
-        #   an identity relabel under the UTC session pin above, and what
-        #   time functions like unix_micros() require.
-        field = dict((f.name, f.dataType) for f in df.schema.fields).get("ts")
-        if isinstance(field, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(field, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return ts_as_timestamp(df) if name == "events" else df
+
+
+def ts_as_timestamp(df: DataFrame) -> DataFrame:
+    """Normalize an event frame's ``ts`` to a regular (UTC) TIMESTAMP
+    whatever the generator wrote — what the stores' unix_micros /
+    day-boundary expressions require:
+    - parquet TIMESTAMP(NANOS) + nanosAsLong arrives as epoch-nanos;
+      truncate to µs with integer division (ns values exceed 2^53, so
+      double arithmetic would corrupt them);
+    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
+      TIMESTAMP_NTZ under Spark 4's inferTimestampNTZ; cast to LTZ — an
+      identity relabel under the UTC session pin, and what time
+      functions like unix_micros() require.
+    Any other ``ts`` (or none) passes through unchanged."""
+    field = {f.name: f.dataType for f in df.schema.fields}.get("ts")
+    if isinstance(field, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(field, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

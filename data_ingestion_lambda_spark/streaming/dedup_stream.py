@@ -1,7 +1,7 @@
-"""Streaming front end for the maintained dedup gate — the composition
-of the two halves of this repo's daily-loop story: Structured
-Streaming's file discovery/checkpointing (streaming/ingest.py) DRIVES
-the persisted-index gate (operators/dedup_gate.py), so "a new document
+"""Streaming front end for the maintained dedup gate: the shared
+availableNow file-stream loop (``streaming.file_stream`` +
+``streaming.drain_available_now``) with the persisted-index gate
+(operators/dedup_gate.py) as its per-batch body, so "a new document
 drop landed" → "it was probed against everything already accepted and
 its signatures joined the index" is one unattended invocation.
 
@@ -35,15 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from data_ingestion_lambda_spark.operators.dedup_gate import (
-    MODE_INPUT_COL,
+    MODE_INPUT_SCHEMA,
     apply_batch,
 )
-
-_MODE_SCHEMA = {
-    "minhash": "doc_id bigint, text string",
-    "exact": "doc_id bigint, text string",
-    "embedding": "doc_id bigint, embedding array<float>",
-}
+from data_ingestion_lambda_spark.streaming import (
+    batch_key,
+    drain_available_now,
+    file_stream,
+)
 
 
 def run_dedup_gate_available_now(
@@ -61,34 +60,20 @@ def run_dedup_gate_available_now(
     per-batch gate reports in processing order; a no-op run (nothing
     new) returns []. Re-running later picks up only files that landed
     since — the checkpoint, not a date convention, defines "new"."""
-    reader = spark.readStream.schema(_MODE_SCHEMA[mode]).option(
-        "recursiveFileLookup", True
+    docs = file_stream(
+        spark, "parquet", source_dir, MODE_INPUT_SCHEMA[mode], max_files_per_trigger
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(source_dir).select("doc_id", MODE_INPUT_COL[mode])
 
-    reports: list[dict] = []
-
-    def _gate(batch: DataFrame, batch_id: int) -> None:
+    def _gate(batch: DataFrame, batch_id: int) -> dict | None:
         if batch.isEmpty():
-            return
-        reports.append(
-            apply_batch(
-                spark,
-                index_dir,
-                batch,
-                f"b{batch_id:09d}",
-                matches_dir=matches_dir,
-                mode=mode,
-            )
+            return None
+        return apply_batch(
+            spark,
+            index_dir,
+            batch,
+            batch_key(batch_id),
+            matches_dir=matches_dir,
+            mode=mode,
         )
 
-    query = (
-        docs.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return reports
+    return drain_available_now(docs, checkpoint_dir, _gate)

@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from data_ingestion_lambda_spark.streaming import drain_available_now, file_stream
+
 
 def stream_tumbling_counts(
     events: DataFrame, window_size: str = "1 hour", watermark: str = "2 hours"
@@ -1100,29 +1102,17 @@ def run_feature_store_available_now(
     for ANY file grouping (moment additivity — pinned in
     tests/test_feature_store.py), and a replayed batch overwrites only
     its own partition."""
-    reader = spark.readStream.schema(_FEATURE_EVENTS_SCHEMA).option(
-        "recursiveFileLookup", True
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = reader.parquet(source_dir)
-    landed = {"n": 0}
 
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
+    def _land(batch_df: DataFrame, batch_id: int) -> int | None:
         if batch_df.isEmpty():
-            return
+            return None
         _land_moment_delta(batch_df, batch_id, ledger_dir)
-        landed["n"] += 1
+        return batch_id
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    events = file_stream(
+        spark, "parquet", source_dir, _FEATURE_EVENTS_SCHEMA, max_files_per_trigger
     )
-    q.awaitTermination()
-    return landed["n"]
+    return len(drain_available_now(events, checkpoint_dir, _land))
 
 
 def stream_heavy_hitters_to_table(

@@ -1,10 +1,10 @@
 """Streaming fronts for the remaining maintained indexes — vocab model,
-BM25 postings, IVF-ANN cells, the incremental session store, the CMS
-store, and (r9) the ANY-SPLIT attribution ledger — the
-same composition the dedup gate (streaming/dedup_stream.py), drift
-monitor, feature store and heavy-hitter store already have: Structured
-Streaming's file discovery/offset log DRIVES the persisted index's
-per-batch apply, so "a new drop landed" → "the index extended" is one
+BM25 postings, IVF-ANN cells, the incremental session store, the CMS,
+Bloom, DSIR and touch-state stores, and the ANY-SPLIT attribution
+ledger. Each is the shared availableNow file-stream loop
+(``streaming.file_stream`` + ``streaming.drain_available_now``) with
+the persisted index's per-batch apply as its body (adapted by
+``keyed_body``), so "a new drop landed" → "the index extended" is one
 unattended invocation.
 
 Reference intent: the reference's scheduled handler discovers new files,
@@ -13,7 +13,7 @@ progress (src/lambda_handler.py:38-102, src/s3_processor.py:113-158);
 these lanes are that loop with each index's apply as the body and the
 stream's checkpoint as the progress record.
 
-Exactly-once shape (shared by all four): foreachBatch is at-least-once,
+Exactly-once shape (shared by all): foreachBatch is at-least-once,
 and every apply here is idempotent PER PARTITION KEY — so the
 micro-batch id becomes the key (``b<batch_id>``): a replayed batch
 overwrites only its own partition, making the replay a bitwise no-op
@@ -58,82 +58,92 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_ingestion_lambda_spark.sources.catalog import ts_as_timestamp
+from data_ingestion_lambda_spark.streaming import (
+    batch_key,
+    drain_available_now,
+    file_stream,
+)
+
 DOCS_SCHEMA = "doc_id bigint, text string"
 VECS_SCHEMA = "vec_id bigint, embedding array<float>"
 EVENTS_SCHEMA = "event_id bigint, user_id bigint, ts timestamp"
 
 
-def _drain(
+def keyed_body(body):
+    """Adapt an index apply ``body(batch, key) -> report`` to the shared
+    loop's ``(batch, batch_id)`` body: empty micro-batches are skipped
+    and the batch id becomes the ``b<id>`` partition key."""
+
+    def _apply(batch: DataFrame, batch_id: int) -> dict | None:
+        if batch.isEmpty():
+            return None
+        return body(batch, batch_key(batch_id))
+
+    return _apply
+
+
+def _land_batch_body(spark: SparkSession, index_dir: str, op_name: str, build):
+    """Body for the ``ingest_batch=``-keyed sketch stores: overwrite the
+    batch's own partition with ``build(batch)``. A key below the
+    compaction horizon is refused first — a checkpoint replay of a batch
+    id folded into the base would double-count (its partition no longer
+    overwrites itself)."""
+    from data_ingestion_lambda_spark.operators.base_fold import (
+        check_not_below_horizon,
+    )
+
+    def _body(batch: DataFrame, key: str) -> dict:
+        check_not_below_horizon(spark, index_dir, key, op_name)
+        build(batch).write.mode("overwrite").parquet(f"{index_dir}/ingest_batch={key}")
+        return {"key": key}
+
+    return _body
+
+
+def _drain_and_compact(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
     schema: str,
     body,
     max_files_per_trigger: int | None,
-) -> list[dict]:
-    """Shared availableNow loop: drain every file not yet in the offset
-    log, run ``body(batch_df, key)`` per micro-batch, stop. Returns the
-    per-batch reports in processing order; a no-op run returns []."""
-    reader = spark.readStream.schema(schema).option("recursiveFileLookup", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
-
-    reports: list[dict] = []
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = body(batch, f"b{batch_id:09d}")
-        reports.append(out if isinstance(out, dict) else {"batch": batch_id})
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return reports
-
-
-def _auto_compact_after_drain(
-    spark: SparkSession,
     index_dir: str,
-    checkpoint_dir: str,
-    max_dirs: int | None,
+    auto_compact_max_dirs: int | None,
     compact_fn,
-    *,
-    count_dir: str | None = None,
-    part_key: str | None = None,
-    base_key: str | None = None,
-) -> dict | None:
-    """The dir-count auto-compaction policy, run as the streaming
-    front's epilogue (VERDICT r11 #2) — a thin shim over the ONE shared
-    implementation, ``operators/base_fold.py::auto_compact_epilogue``
-    (VERDICT r12 #4). After a drained availableNow run every processed
-    batch is COMMITTED, and the fold key is still capped at the
-    checkpoint's committed front so a key a future replay needs can
-    never be spent — the land-side ``check_not_below_horizon`` refusals
-    therefore never wedge the stream. Returns the policy report wrapped
-    as ``{"auto_compact": {..., "compaction": <fold result>}}``
-    (appended to the runner's reports) or None when the caller didn't
-    opt in."""
+    **compact_kw,
+) -> list[dict]:
+    """Every index front's shape: drain the parquet files under
+    ``source_dir`` the offset log has not seen through
+    ``keyed_body(body)``, then run the opt-in dir-count auto-compaction
+    (``base_fold.auto_compact_epilogue``; ``compact_kw`` passes through).
+    Returns the per-batch reports in processing order, plus
+    ``{"auto_compact": <policy report>}`` when the epilogue ran; a no-op
+    run returns []."""
     from data_ingestion_lambda_spark.operators.base_fold import (
         auto_compact_epilogue,
     )
 
+    reports = drain_available_now(
+        file_stream(spark, "parquet", source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        keyed_body(body),
+    )
+    # Every drained batch is committed by now, and the fold key is still
+    # capped at the checkpoint's committed front: a key a future replay
+    # needs is never spent, so the land-side check_not_below_horizon
+    # refusals never wedge the stream.
     policy = auto_compact_epilogue(
         spark,
         index_dir,
-        max_dirs=max_dirs,
+        max_dirs=auto_compact_max_dirs,
         compact_fn=compact_fn,
         checkpoint_dir=checkpoint_dir,
-        count_dir=count_dir,
-        part_key=part_key,
-        base_key=base_key,
+        **compact_kw,
     )
-    return None if policy is None else {"auto_compact": policy}
+    if policy is not None:
+        reports.append({"auto_compact": policy})
+    return reports
 
 
 def run_vocab_update_available_now(
@@ -154,24 +164,17 @@ def run_vocab_update_available_now(
     mismatched directory fails its first trigger loudly)."""
     from data_ingestion_lambda_spark.operators.vocab import compact_vocab, update_vocab
 
-    reports = _drain(
+    return _drain_and_compact(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_SCHEMA,
         lambda batch, key: update_vocab(spark, vocab_dir, batch, key, order=order),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
         vocab_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
         lambda kf: compact_vocab(spark, vocab_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_postings_update_available_now(
@@ -192,25 +195,18 @@ def run_postings_update_available_now(
         update_postings,
     )
 
-    reports = _drain(
+    return _drain_and_compact(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_SCHEMA,
         lambda batch, key: update_postings(spark, index_dir, batch, key),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
         index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
         lambda kf: compact_postings_index(spark, index_dir, kf),
         count_dir=f"{index_dir}/doclen",
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_ann_append_available_now(
@@ -228,7 +224,10 @@ def run_ann_append_available_now(
     ``train_index`` must have run first; refuses loudly otherwise (a
     quantizer trained mid-stream would assign different batches with
     different models, breaking the one-shot equivalence)."""
-    from data_ingestion_lambda_spark.operators.ann_index import append_batch
+    from data_ingestion_lambda_spark.operators.ann_index import (
+        append_batch,
+        compact_index_cells,
+    )
     from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
 
     fs, path_cls = _hadoop_fs(spark, index_dir)
@@ -239,27 +238,18 @@ def run_ann_append_available_now(
             "streamed append (a mid-stream retrain would assign batches "
             "against different models)"
         )
-    reports = _drain(
+    return _drain_and_compact(
         spark,
         source_dir,
         checkpoint_dir,
         VECS_SCHEMA,
         lambda batch, key: append_batch(spark, index_dir, batch, key),
         max_files_per_trigger,
-    )
-    from data_ingestion_lambda_spark.operators.ann_index import compact_index_cells
-
-    ac = _auto_compact_after_drain(
-        spark,
         index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
         lambda kf: compact_index_cells(spark, index_dir, kf),
         count_dir=f"{index_dir}/cells",
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_session_update_available_now(
@@ -285,41 +275,26 @@ def run_session_update_available_now(
     ``schema="event_id bigint, user_id bigint, ts bigint"`` for such
     drops and the body applies the same epoch-ns normalization as the
     CLI's --batch path (TIMESTAMP_NTZ likewise relabels to UTC)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     from data_ingestion_lambda_spark.operators.session_store import (
+        compact_session_store,
         land_session_batch,
     )
 
     def _body(batch: DataFrame, key: str) -> dict:
-        field = {f.name: f.dataType for f in batch.schema.fields}.get("ts")
-        if isinstance(field, LongType):
-            batch = batch.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(field, TimestampNTZType):
-            batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-        land_session_batch(spark, index_dir, batch, key)
+        land_session_batch(spark, index_dir, ts_as_timestamp(batch), key)
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.session_store import (
-        compact_session_store,
-    )
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, schema, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain_and_compact(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        schema,
+        _body,
+        max_files_per_trigger,
+        index_dir,
         auto_compact_max_dirs,
         lambda kf: compact_session_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 ITEMS_SCHEMA = "item string"
@@ -340,41 +315,25 @@ def run_cms_update_available_now(
     read (operators/cms_store.py::read_cms) equals the one-shot sketch
     over everything ingested, any trigger split. Replays overwrite only
     their own partition."""
-    from data_ingestion_lambda_spark.operators.base_fold import (
-        check_not_below_horizon,
+    from data_ingestion_lambda_spark.operators.cms_store import (
+        check_keying_marker,
+        compact_cms_store,
     )
-    from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
     from data_ingestion_lambda_spark.plans.profiling import cms_counters
 
     # one directory, one keying: refuse an index the CLI keys by date=
     check_keying_marker(spark, index_dir, "ingest_batch")
-
-    def _body(batch: DataFrame, key: str) -> dict:
-        # a checkpoint replay of a batch id folded into the base would
-        # double-count (its partition no longer overwrites itself)
-        check_not_below_horizon(spark, index_dir, key, "cms stream land")
-        (
-            cms_counters(batch)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/ingest_batch={key}")
-        )
-        return {"key": key}
-
-    from data_ingestion_lambda_spark.operators.cms_store import compact_cms_store
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, ITEMS_SCHEMA, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain_and_compact(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        ITEMS_SCHEMA,
+        _land_batch_body(spark, index_dir, "cms stream land", cms_counters),
+        max_files_per_trigger,
+        index_dir,
         auto_compact_max_dirs,
         lambda kf: compact_cms_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 ATTR_EVENTS_SCHEMA = (
@@ -407,44 +366,28 @@ def run_attribution_update_available_now(
     drops carry parquet TIMESTAMP(NANOS) (a LONG under the session's
     nanosAsLong conf) or TIMESTAMP_NTZ — pass the matching schema and
     the body converts."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    from data_ingestion_lambda_spark.operators.attribution_store import (
-        land_attribution_batch,
-    )
-
-    def _body(batch: DataFrame, key: str) -> dict:
-        field = {f.name: f.dataType for f in batch.schema.fields}.get("ts")
-        if isinstance(field, LongType):
-            batch = batch.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(field, TimestampNTZType):
-            batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-        return land_attribution_batch(spark, index_dir, batch, key)
-
     from data_ingestion_lambda_spark.operators.attribution_store import (
         LEDGER_BASE_KEY,
         compact_attribution_ledger,
+        land_attribution_batch,
     )
 
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, schema, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain_and_compact(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        schema,
+        lambda batch, key: land_attribution_batch(
+            spark, index_dir, ts_as_timestamp(batch), key
+        ),
+        max_files_per_trigger,
+        index_dir,
         auto_compact_max_dirs,
         lambda kf: compact_attribution_ledger(spark, index_dir, kf),
         count_dir=f"{index_dir}/stream_purchases",
         part_key="ingest_batch",
         base_key=LEDGER_BASE_KEY,
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 DOCS_LANG_SCHEMA = "doc_id bigint, lang string, text string"
@@ -473,6 +416,7 @@ def run_bloom_update_available_now(
     from data_ingestion_lambda_spark.operators.bloom_store import (
         _check_sizing_marker,
         _fps,
+        compact_bloom_store,
     )
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
     from data_ingestion_lambda_spark.plans.llm_ops import (
@@ -487,35 +431,19 @@ def run_bloom_update_available_now(
     bloom_check_sizing(m, k)
     check_keying_marker(spark, index_dir, "ingest_batch")
     _check_sizing_marker(spark, index_dir, m, k)
-
-    def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
-
-        check_not_below_horizon(spark, index_dir, key, "bloom stream land")
-        (
-            bloom_words(_fps(batch), m, k)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/ingest_batch={key}")
-        )
-        return {"key": key}
-
-    from data_ingestion_lambda_spark.operators.bloom_store import compact_bloom_store
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, DOCS_SCHEMA, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain_and_compact(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        DOCS_SCHEMA,
+        _land_batch_body(
+            spark, index_dir, "bloom stream land", lambda b: bloom_words(_fps(b), m, k)
+        ),
+        max_files_per_trigger,
+        index_dir,
         auto_compact_max_dirs,
         lambda kf: compact_bloom_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_dsir_update_available_now(
@@ -537,48 +465,30 @@ def run_dsir_update_available_now(
     from pyspark.sql import functions as F
 
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-    from data_ingestion_lambda_spark.operators.dsir_store import _check_target_marker
+    from data_ingestion_lambda_spark.operators.dsir_store import (
+        _check_target_marker,
+        compact_dsir_store,
+    )
     from data_ingestion_lambda_spark.plans.llm_ops import dsir_features, dsir_stats
 
     check_keying_marker(spark, index_dir, "ingest_batch")
     _check_target_marker(spark, index_dir, target_lang)
 
-    def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
+    def _stats(batch: DataFrame) -> DataFrame:
+        is_t = (F.col("lang") == target_lang).alias("is_t")
+        return dsir_stats(dsir_features(batch.select("doc_id", is_t, "text")))
 
-        check_not_below_horizon(spark, index_dir, key, "dsir stream land")
-        stats = dsir_stats(
-            dsir_features(
-                batch.select(
-                    "doc_id", (F.col("lang") == target_lang).alias("is_t"), "text"
-                )
-            )
-        )
-        stats.write.mode("overwrite").parquet(f"{index_dir}/ingest_batch={key}")
-        return {"key": key}
-
-    from data_ingestion_lambda_spark.operators.dsir_store import compact_dsir_store
-
-    reports = _drain(
+    return _drain_and_compact(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_LANG_SCHEMA,
-        _body,
+        _land_batch_body(spark, index_dir, "dsir stream land", _stats),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
         index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
         lambda kf: compact_dsir_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 TOUCH_EVENTS_SCHEMA = "event_id bigint, user_id bigint, event_type string"
@@ -599,40 +509,20 @@ def run_touch_update_available_now(
     trigger split, even with re-delivered events. The strongest ledger
     semantics of any maintained store here."""
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-    from data_ingestion_lambda_spark.operators.touch_store import _user_state
+    from data_ingestion_lambda_spark.operators.touch_store import (
+        _user_state,
+        compact_touch_store,
+    )
 
     check_keying_marker(spark, index_dir, "ingest_batch")
-
-    def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
-
-        check_not_below_horizon(spark, index_dir, key, "touch stream land")
-        (
-            _user_state(batch)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/ingest_batch={key}")
-        )
-        return {"key": key}
-
-    from data_ingestion_lambda_spark.operators.touch_store import compact_touch_store
-
-    reports = _drain(
+    return _drain_and_compact(
         spark,
         source_dir,
         checkpoint_dir,
         TOUCH_EVENTS_SCHEMA,
-        _body,
+        _land_batch_body(spark, index_dir, "touch stream land", _user_state),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
         index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
         lambda kf: compact_touch_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports

@@ -1,21 +1,26 @@
-"""Incremental ingestion: Structured Streaming file source + foreachBatch
-MERGE — the Spark-native replacement for the reference's entire control
-plane (SURVEY §2.1 S1/S3-S6/S8).
+"""Incremental ingestion: the shared availableNow file-stream loop
+(``streaming.file_stream`` + ``streaming.drain_available_now``) with a
+foreachBatch MERGE body — the Spark-native replacement for the
+reference's entire control plane (SURVEY §2.1 S1/S3-S6/S8).
 
 What each reference mechanism becomes:
 - checkpoint date file (src/s3_processor.py:113-158,192-210)
     → the stream's ``checkpointLocation`` offset/commit log (atomic,
       transactional — fixes the lost-file bug of SURVEY §1.4.2)
 - missing-dates backfill ledger (src/s3_processor.py:162-189)
-    → the file source re-lists the glob every trigger and picks up
+    → the file source re-lists the tree every trigger and picks up
       late-landing files regardless of their date directory; no ledger
 - per-file loop + per-file commit (src/db_operations.py:8-54)
     → micro-batches with idempotent MERGE ⇒ end-to-end exactly-once
 - scheduled Lambda invocation (src/lambda_handler.py:38)
-    → ``trigger(availableNow=True)``: one invocation drains everything
-      new then stops — same operational shape, real checkpointing
+    → one ``drain_available_now`` call: drain everything new then stop
 - JSON audit twin (src/s3_processor.py:147-154)
     → an append-only parquet ingestion log written per batch
+
+Two sinks share one CSV front (``_consumption_stream``) and one
+last-writer-wins order (``LWW_ORDER``): the partitioned parquet table
+(``run_ingest_available_now``) and an RDBMS via JDBC staging + MERGE
+(``run_ingest_to_jdbc_available_now``).
 
 Scale notes: ``maxFilesPerTrigger`` bounds batch size (the pacing the
 reference accidentally got from MaxKeys=10, SURVEY §1.4.5, minus the data
@@ -36,8 +41,50 @@ from data_ingestion_lambda_spark.operators.upsert import (
     upsert_into_parquet_with_cdc,
 )
 from data_ingestion_lambda_spark.schemas import CONSUMPTION_RAW_SCHEMA, CORRUPT_COL
+from data_ingestion_lambda_spark.streaming import (
+    batch_key,
+    drain_available_now,
+    file_stream,
+)
 
 QUARANTINE_PART_COL = "_batch_id"
+
+# Last-writer-wins order, shared by both sinks. The reference processes
+# files sequentially in date order (src/s3_processor.py:78), and
+# date-partitioned drop paths sort lexicographically by date, so ranking
+# by path reproduces "later file wins". Within one file, Spark packs
+# splits largest-first, so monotonically_increasing_id alone does NOT
+# follow file offset when a file spans several splits — the split's byte
+# offset (_metadata.file_block_start) restores cross-split order, and
+# _ingest_seq (monotonic within a split) breaks ties inside one split.
+LWW_ORDER = ("_source_file", "_block_start", "_ingest_seq")
+
+
+def _consumption_stream(
+    spark: SparkSession,
+    source_dir: str,
+    max_files_per_trigger: int | None,
+    path_glob: str,
+) -> DataFrame:
+    """The CSV drop front both sinks drain: permissive parse against the
+    raw schema (bad rows keep their text in the corrupt column for the
+    quarantine) plus the ``_source_file`` / ``_block_start`` provenance
+    columns ``LWW_ORDER`` ranks by."""
+    return (
+        file_stream(
+            spark,
+            "csv",
+            source_dir,
+            CONSUMPTION_RAW_SCHEMA,
+            max_files_per_trigger,
+            header=True,
+            mode="PERMISSIVE",
+            columnNameOfCorruptRecord=CORRUPT_COL,
+            pathGlobFilter=path_glob,
+        )
+        .withColumn("_source_file", F.input_file_name())
+        .withColumn("_block_start", F.col("_metadata.file_block_start"))
+    )
 
 
 def _write_quarantine(
@@ -80,15 +127,6 @@ def _process_batch(
     batch_id: int,
     processed_dates: set | None = None,
 ) -> None:
-    # Last-writer-wins order = (_source_file, _block_start, _ingest_seq):
-    # the reference processes files sequentially in date order
-    # (src/s3_processor.py:78), and date-partitioned drop paths sort
-    # lexicographically by date, so ranking by path reproduces "later file
-    # wins". Within one file, Spark packs splits largest-first, so
-    # monotonically_increasing_id alone does NOT follow file offset when a
-    # file spans several splits — the split's byte offset
-    # (_metadata.file_block_start) restores cross-split order, and
-    # _ingest_seq (monotonic within a split) breaks ties inside one split.
     batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
     if "_block_start" not in batch.columns:
         # Batch handed in without file-source metadata (tests, ad-hoc
@@ -111,10 +149,10 @@ def _process_batch(
         rep = upsert_into_parquet_with_cdc(
             spark,
             paths.target_dir,
-            good.withColumnRenamed("_source_file", "_file_seq"),
-            change_key=f"b{batch_id:09d}",
+            good,
+            change_key=batch_key(batch_id),
             changes_dir=paths.changes_dir,
-            order_cols=["_file_seq", "_block_start", "_ingest_seq"],
+            order_cols=list(LWW_ORDER),
             # audit timestamps refresh on every winning re-send; the feed
             # should capture PAYLOAD changes, not ingest-time churn
             ignore_cols=("updated_at", "created_at"),
@@ -124,8 +162,8 @@ def _process_batch(
         written = upsert_into_parquet(
             spark,
             paths.target_dir,
-            good.withColumnRenamed("_source_file", "_file_seq"),
-            order_cols=["_file_seq", "_block_start", "_ingest_seq"],
+            good,
+            order_cols=list(LWW_ORDER),
         )
     if processed_dates is not None:
         processed_dates.update(written)
@@ -187,27 +225,9 @@ def run_ingest_to_jdbc_available_now(
     )
     from data_ingestion_lambda_spark.schemas import UPSERT_KEYS
 
-    reader = (
-        spark.readStream.schema(CONSUMPTION_RAW_SCHEMA)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("recursiveFileLookup", True)
-        .option("pathGlobFilter", path_glob)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = (
-        reader.csv(source_dir)
-        .withColumn("_source_file", F.input_file_name())
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
-    n_batches = 0
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
+    def _apply(batch: DataFrame, batch_id: int) -> int | None:
         if batch.isEmpty():
-            return
+            return None
         batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
         good, quarantined = normalize_consumption(batch)
         # Quarantined rows must not vanish: persist them keyed by batch
@@ -216,7 +236,7 @@ def run_ingest_to_jdbc_available_now(
         if quarantine_dir is not None:
             _write_quarantine(spark, quarantine_dir, quarantined, batch_id)
         # one winning row per MERGE key, same order as the parquet sink
-        order = F.struct("_source_file", "_block_start", "_ingest_seq")
+        order = F.struct(*LWW_ORDER)
         payload = [c for c in good.columns if not c.startswith("_")]
         winners = (
             good.withColumn("_o", order)
@@ -247,16 +267,10 @@ def run_ingest_to_jdbc_available_now(
             staging_column_types=staging_column_types,
             properties=properties,
         )
-        n_batches += 1
+        return batch_id
 
-    q = (
-        raw.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    raw = _consumption_stream(spark, source_dir, max_files_per_trigger, path_glob)
+    return len(drain_available_now(raw, checkpoint_dir, _apply))
 
 
 def run_ingest_available_now(
@@ -274,37 +288,12 @@ def run_ingest_available_now(
     OLD dates (late backfill) — because discovery is by file, not by a
     monotonic date checkpoint. This is the semantic fix for SURVEY §1.4.2/6.
     """
-    reader = (
-        spark.readStream.schema(CONSUMPTION_RAW_SCHEMA)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("recursiveFileLookup", True)
-        .option("pathGlobFilter", path_glob)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = (
-        reader.csv(paths.source_dir)
-        .withColumn("_source_file", F.input_file_name())
-        # Split offset within the file: Spark packs file splits
-        # largest-first, so monotonically_increasing_id alone does NOT
-        # follow file offset when one file spans several splits. The
-        # hidden file-source metadata column carries each split's byte
-        # offset; ordering by it restores true within-file row order.
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
-
     processed_dates: set = set()
-    query = (
-        raw.writeStream.foreachBatch(
-            lambda batch, batch_id: _process_batch(
-                spark, paths, batch, batch_id, processed_dates
-            )
-        )
-        .option("checkpointLocation", paths.checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        _consumption_stream(spark, paths.source_dir, max_files_per_trigger, path_glob),
+        paths.checkpoint_dir,
+        lambda batch, batch_id: _process_batch(
+            spark, paths, batch, batch_id, processed_dates
+        ),
     )
-    query.awaitTermination()
     return sorted(str(d) for d in processed_dates)

@@ -163,3 +163,29 @@ def test_finished_stream_rerun_is_noop_and_late_files_gate_incrementally(
         .collect()
     )
     assert _flag_pairs(spark, tmp_path / "matches") == want
+
+
+def test_streamed_gate_releases_what_each_batch_pinned(spark, tmp_path):
+    # Every micro-batch pins its signature table (minhash_sig_table) and
+    # its flag table; a long-running stream must not keep one cached
+    # copy per batch for the life of the session.
+    from data_ingestion_lambda_spark.plans import registry
+
+    docs = _docs(spark)
+    src = tmp_path / "drops"
+    for day in range(_N_DAYS):
+        _drop_day(docs, day, src)
+    jsc = spark.sparkContext._jsc
+    rdds_before = jsc.getPersistentRDDs().size()
+    pinned_before = len(registry._PINNED)
+    reports = run_dedup_gate_available_now(
+        spark,
+        str(src),
+        str(tmp_path / "index"),
+        str(tmp_path / "ckpt"),
+        matches_dir=str(tmp_path / "matches"),
+        max_files_per_trigger=1,
+    )
+    assert len(reports) == _N_DAYS
+    assert jsc.getPersistentRDDs().size() == rdds_before
+    assert len(registry._PINNED) == pinned_before

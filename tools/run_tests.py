@@ -17,9 +17,15 @@ the previous run (tools/.test_timings.json, refreshed from each worker's
 junit XML); first run falls back to file size. The cache is committed so
 a fresh checkout balances well immediately.
 
+Sizing comes from the host: each worker's Spark JVM gets a heap of
+(MemTotal - 2 GiB) / jobs - 2 GiB (the 2 GiB per worker covers the
+JVM's off-heap memory and its Python workers), and the default job
+count is the largest that leaves every worker PER_WORKER_MIN_GIB and two
+cores — 2 workers with 4 GiB heaps on a 16 GiB, 4-core host.
+
 Usage:
-    python tools/run_tests.py              # default --jobs 6
-    python tools/run_tests.py --jobs 8 -- -k "not integration"
+    python tools/run_tests.py              # default --jobs from the host
+    python tools/run_tests.py --jobs 2 -- -k "not integration"
 Exit code: nonzero iff any worker failed (pytest exit 5 "no tests
 collected" counts as success for a shard).
 """
@@ -41,6 +47,28 @@ REPO = Path(__file__).resolve().parent.parent
 TESTS = REPO / "tests"
 TIMINGS = REPO / "tools" / ".test_timings.json"
 SUMMARY_RE = re.compile(r"(\d+) (passed|failed|skipped|error|errors|xfailed|xpassed)")
+# JVM heap + off-heap (metaspace, code cache, pandas-UDF Python
+# workers) per worker, and the memory kept for the OS and the runner
+PER_WORKER_MIN_GIB = 6
+OFF_HEAP_GIB = 2
+RESERVED_GIB = 2
+
+
+def host_cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def host_mem_gib() -> int:
+    """MemTotal from /proc/meminfo, in whole GiB."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // (1024 * 1024)
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def default_jobs(cpus: int, mem_gib: int) -> int:
+    return max(1, min(cpus // 2, (mem_gib - RESERVED_GIB) // PER_WORKER_MIN_GIB))
 
 
 def load_timings() -> dict[str, float]:
@@ -81,8 +109,9 @@ def parse_junit(path: Path) -> dict[str, float]:
 
 
 def main() -> int:
+    cpus, mem_gib = host_cpus(), host_mem_gib()
     ap = argparse.ArgumentParser()
-    ap.add_argument("--jobs", type=int, default=6)
+    ap.add_argument("--jobs", type=int, default=default_jobs(cpus, mem_gib))
     ap.add_argument(
         "pytest_args",
         nargs="*",
@@ -103,9 +132,10 @@ def main() -> int:
             flush=True,
         )
     buckets = shard(files, args.jobs, timings)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
-    per_cores = max(4, cpus // max(1, len(buckets)))
-    per_mem_g = max(8, 96 // max(1, len(buckets)))
+    n = max(1, len(buckets))
+    per_cores = max(1, cpus // n)
+    per_mem_g = max(1, (mem_gib - RESERVED_GIB) // n - OFF_HEAP_GIB)
+    print(f"{n} worker(s), {per_cores} core(s) and a {per_mem_g} GiB heap each", flush=True)
 
     t0 = time.time()
     procs = []
